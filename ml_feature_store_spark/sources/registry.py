@@ -16,17 +16,31 @@ storage concern behind a small interface with two implementations:
   and map version -> snapshot (``versionAsOf``). Writes optionally
   ``partitionBy`` a derived date column and ``sortWithinPartitions
   (entity, ts)`` for scan locality / pruning at scale.
+
+Schema contract (Parquet backend): a published version directory is
+immutable, so its schema is memoized per ``(table, version)`` in the store
+instance — seeded by ``write_version`` from the written frame, or inferred
+once on the first read — and a memoized read skips Spark's schema-inference
+job and footer fetch. File listings are never memoized: every read lists
+the directory afresh. ``rewrite_version``, ``drop_version``,
+``rollback_version`` and ``drop_table`` evict their entries, and every hit
+is checked against the directory's identity (inode, mtime), so a rewrite or
+drop-and-recreate by another instance or process is never read through a
+stale schema. This is what Delta/Iceberg get from keeping the schema in
+their log.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 @dataclass
@@ -60,6 +74,21 @@ class TableState:
 
 def _now_iso() -> str:
     return datetime.now(timezone.utc).isoformat()
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — what a
+    Parquet read-back reports for whatever Spark wrote."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class MemoryVersionStore:
@@ -116,6 +145,9 @@ class MemoryVersionStore:
     def read_version(self, name: str, version: int) -> DataFrame:
         return self._data[name][version]
 
+    def schema(self, name: str, version: int) -> StructType:
+        return self._data[name][version].schema
+
     def rewrite_version(self, name: str, version: int, df: DataFrame,
                         row_count: int) -> None:
         """In-place replace a version's contents (GDPR erasure path) —
@@ -165,6 +197,10 @@ class ParquetVersionStore:
         self.root.mkdir(parents=True, exist_ok=True)
         self.partition_by = partition_by
         self.sort_within_partitions = sort_within_partitions
+        # (table, version) -> (directory identity, schema); see the
+        # module docstring for the contract
+        self._schemas: dict[tuple[str, int],
+                            tuple[tuple[int, int] | None, StructType]] = {}
 
     # -- meta persistence --------------------------------------------------
     def _meta_path(self, name: str) -> Path:
@@ -193,7 +229,6 @@ class ParquetVersionStore:
         # the meta save IS the version-visibility commit point — it gets
         # the same crash-atomic replace as the registry/snapshot files
         # (a truncated _meta.json would brick every read of the table)
-        import os
         import tempfile
 
         fd, tmp = tempfile.mkstemp(
@@ -229,17 +264,51 @@ class ParquetVersionStore:
     def _version_path(self, name: str, version: int) -> Path:
         return self.root / name / f"v={version}"
 
-    def write_version(self, name: str, version: int, df: DataFrame, row_count,
-                      description: str = "", max_row_id=None) -> None:
+    def _dir_identity(self, name: str, version: int) -> tuple[int, int] | None:
+        try:
+            st = os.stat(self._version_path(name, version))
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns
+
+    def _memo(self, name: str, version: int) -> StructType | None:
+        """The memoized schema of a version, or None. An entry whose
+        directory changed identity (rewritten or recreated behind this
+        instance's back) is dropped."""
+        key = (name, version)
+        hit = self._schemas.get(key)
+        if hit is not None and hit[0] == self._dir_identity(name, version):
+            return hit[1]
+        self._schemas.pop(key, None)
+        return None
+
+    def _evict(self, name: str, version: int | None = None) -> None:
+        for key in list(self._schemas):
+            if key[0] == name and (version is None or key[1] == version):
+                self._schemas.pop(key, None)
+
+    def _write(self, df: DataFrame, path: Path) -> StructType:
+        """Write ``df`` as one version directory; returns the schema a
+        Parquet read of it reports: ``df``'s, made nullable, with the
+        partition column moved last."""
         out = df
         if self.sort_within_partitions:
             cols = [c for c in self.sort_within_partitions if c in df.columns]
             if cols:
                 out = out.sortWithinPartitions(*cols)
         writer = out.write.mode("overwrite")
+        fields = _nullable(df.schema).fields
         if self.partition_by and self.partition_by in df.columns:
             writer = writer.partitionBy(self.partition_by)
-        writer.parquet(str(self._version_path(name, version)))
+            fields = ([f for f in fields if f.name != self.partition_by]
+                      + [f for f in fields if f.name == self.partition_by])
+        writer.parquet(str(path))
+        return StructType(fields)
+
+    def write_version(self, name: str, version: int, df: DataFrame, row_count,
+                      description: str = "", max_row_id=None) -> None:
+        schema = self._write(df, self._version_path(name, version))
+        self._schemas[(name, version)] = (self._dir_identity(name, version), schema)
         # thunks resolve after the write action (observe-metric stats)
         row_count = int(row_count() if callable(row_count) else row_count)
         if callable(max_row_id):
@@ -261,7 +330,18 @@ class ParquetVersionStore:
         self._save_meta(state)
 
     def read_version(self, name: str, version: int) -> DataFrame:
-        return self.spark.read.parquet(str(self._version_path(name, version)))
+        path = str(self._version_path(name, version))
+        schema = self._memo(name, version)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        ident = self._dir_identity(name, version)
+        df = self.spark.read.parquet(path)
+        self._schemas[(name, version)] = (ident, df.schema)
+        return df
+
+    def schema(self, name: str, version: int) -> StructType:
+        schema = self._memo(name, version)
+        return schema if schema is not None else self.read_version(name, version).schema
 
     def rewrite_version(self, name: str, version: int, df: DataFrame,
                         row_count: int) -> None:
@@ -274,15 +354,8 @@ class ParquetVersionStore:
         row_count change."""
         final = self._version_path(name, version)
         tmp = final.with_name(final.name + ".__rewrite__")
-        out = df
-        if self.sort_within_partitions:
-            cols = [c for c in self.sort_within_partitions if c in df.columns]
-            if cols:
-                out = out.sortWithinPartitions(*cols)
-        writer = out.write.mode("overwrite")
-        if self.partition_by and self.partition_by in df.columns:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(str(tmp))
+        self._write(df, tmp)
+        self._evict(name, version)
         shutil.rmtree(final, ignore_errors=True)
         tmp.rename(final)
         state = self._load_meta(name)
@@ -298,6 +371,7 @@ class ParquetVersionStore:
         self._save_meta(state)
 
     def drop_version(self, name: str, version: int) -> None:
+        self._evict(name, version)
         shutil.rmtree(self._version_path(name, version), ignore_errors=True)
         state = self._load_meta(name)
         state.versions.pop(version, None)
@@ -307,6 +381,7 @@ class ParquetVersionStore:
         """Unpublish a just-written version (register's empty-input
         rollback): remove its files AND restore the current-version
         pointer; a table left with no versions disappears entirely."""
+        self._evict(name, version)
         shutil.rmtree(self._version_path(name, version), ignore_errors=True)
         state = self._load_meta(name)
         state.versions.pop(version, None)
@@ -317,4 +392,5 @@ class ParquetVersionStore:
         self._save_meta(state)
 
     def drop_table(self, name: str) -> None:
+        self._evict(name)
         shutil.rmtree(self.root / name, ignore_errors=True)

@@ -33,6 +33,7 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .errors import FeatureStoreError, FeatureTableNotFoundError, FeatureValidationError
 from .operators.asof import asof_join, asof_join_nearest
@@ -160,13 +161,6 @@ class FeatureStore:
                 partition_by=partition_by,
                 sort_within_partitions=sort_within_partitions,
             )
-        # (table, version) -> natural key columns (or None for scalar
-        # keys). A version's schema is immutable, so sniffing the struct
-        # key from the backend ONCE per version is safe — without the
-        # cache every get_table_info/_validate_columns call would pay a
-        # backend version read (a Parquet footer fetch) just to discover
-        # the key (round-8 ADVICE fix). Invalidated per-table on delete().
-        self._key_cache: dict[tuple[str, int], tuple[str, ...] | None] = {}
         # cross-table snapshot manifests: persisted beside the Parquet
         # backend (survive the process) or in-process for the memory one
         self._snapshots: dict[str, SnapshotManifest] = self._load_snapshots()
@@ -261,8 +255,7 @@ class FeatureStore:
         every referencing spec): the registry's eager-validation contract
         would otherwise dangle silently until the 3 a.m. build. Pass
         ``cascade=True`` to drop the referencing specs together with the
-        table. The table's TTL default and key cache are released either
-        way."""
+        table. The table's TTL default is released either way."""
         if not self._backend.exists(name):
             return False
         refs = self._spec_references(name)
@@ -276,7 +269,6 @@ class FeatureStore:
                 )
             # the cascade drops EXACTLY what _spec_references reported —
             # one rule, no drift between the message and the action
-            dropped_tables = []
             for kind, n in refs:
                 if kind == "derived view":
                     self._derived.pop(n, None)
@@ -293,7 +285,6 @@ class FeatureStore:
                         vname = n + suffix
                         if self._backend.exists(vname):
                             self._backend.drop_table(vname)
-                            dropped_tables.append(vname)
                 elif kind == "probe":
                     self._probes.pop(n, None)
                 elif kind == "dedup index":
@@ -301,29 +292,15 @@ class FeatureStore:
                     dn = n + self._DINDEX_DATA_SUFFIX
                     if self._backend.exists(dn):
                         self._backend.drop_table(dn)
-                        dropped_tables.append(dn)
                 else:  # rollup
                     self._rollups.pop(n, None)
                     rname = n + self._ROLLUP_SUFFIX
                     if self._backend.exists(rname):
                         self._backend.drop_table(rname)
-                        dropped_tables.append(rname)
-        else:
-            dropped_tables = []
         self._backend.drop_table(name)
-        dropped_tables.append(name)
         online = name + self._ONLINE_SUFFIX
         if self._backend.exists(online):
             self._backend.drop_table(online)
-        dropped_tables.append(online)
-        # a later re-creation restarts each dropped table (incl. the
-        # online view and cascaded rollup state) at version 1, possibly
-        # with a different key shape — stale (table, version) entries
-        # must go for EVERY dropped table, not just the base name
-        gone = set(dropped_tables)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] not in gone
-        }
         dropped_ttl = self._ttl.pop(name, None) is not None
         dropped_online = self._online_meta.pop(name, None) is not None
         if dropped_ttl or dropped_online or refs:
@@ -480,16 +457,9 @@ class FeatureStore:
         )
         if row_count() == 0:  # cached observation — no extra job
             self._backend.rollback_version(name, new_version)
-            self._key_cache.pop((name, new_version), None)
             raise FeatureValidationError(
                 f"DataFrame is empty (register('{name}'))"
             )
-        # seed the key-shape cache from the frame we just wrote — the
-        # version's schema is known here, so get_table_info never pays
-        # the backend schema-sniff read (parquet footer job) for it
-        self._key_cache.setdefault(
-            (name, new_version), self._entity_key_cols(prepared)
-        )
         self._prune_history(name)
         # a re-register rewrites history with fresh row ids — the
         # incremental fold equations no longer hold for ANY dependent
@@ -589,9 +559,6 @@ class FeatureStore:
         self._backend.write_version(
             name, new_version, merged, row_count, description,
             max_row_id=new_max,
-        )
-        self._key_cache.setdefault(
-            (name, new_version), self._entity_key_cols(merged)
         )
         self._prune_history(name)
         if widened:
@@ -694,7 +661,6 @@ class FeatureStore:
         )
         if row_count() == 0:
             self._backend.rollback_version(name, new_version)
-            self._key_cache.pop((name, new_version), None)
             raise FeatureValidationError(
                 f"expire_features('{name}'): cutoff {cutoff} would drop every "
                 f"row — refusing to write an empty version."
@@ -1576,9 +1542,6 @@ class FeatureStore:
         dname = name + self._DATASET_SUFFIX
         if self._backend.exists(dname):
             self._backend.drop_table(dname)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != dname
-        }
         self._save_registry()
         return True
 
@@ -1770,12 +1733,6 @@ class FeatureStore:
         rname = rollup + self._ROLLUP_SUFFIX
         if self._backend.exists(rname):
             self._backend.drop_table(rname)
-        # mirror delete(cascade=True)'s invalidation: a re-created
-        # same-named rollup restarts its state table, so a stale
-        # (rname, version) key-shape entry must not survive
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != rname
-        }
         return True
 
     @staticmethod
@@ -2186,9 +2143,6 @@ class FeatureStore:
         for v in self._backend.versions(name):
             if v not in keep_set:
                 self._backend.drop_version(name, v)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != name
-        }
 
     def refresh_vector_index(self, index: str) -> int:
         """Fold rows APPENDED to the source since the last (re)build into
@@ -3098,15 +3052,10 @@ class FeatureStore:
         except BaseException:
             self._vector_indexes[index] = spec
             raise
-        gone = set()
         for suffix in (self._VINDEX_DATA_SUFFIX, self._VINDEX_MODEL_SUFFIX):
             n = index + suffix
             if self._backend.exists(n):
                 self._backend.drop_table(n)
-            gone.add(n)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] not in gone
-        }
         return True
 
     @staticmethod
@@ -3899,9 +3848,6 @@ class FeatureStore:
         dname = index + self._DINDEX_DATA_SUFFIX
         if self._backend.exists(dname):
             self._backend.drop_table(dname)
-        self._key_cache = {
-            k: v for k, v in self._key_cache.items() if k[0] != dname
-        }
         return True
 
     def get_dedup_signatures(self, index: str) -> DataFrame:
@@ -6315,34 +6261,29 @@ class FeatureStore:
     # push down (nested schema pruning is on by default in Spark 4).
 
     @staticmethod
-    def _entity_key_cols(df: DataFrame) -> tuple[str, ...] | None:
-        """Natural key columns of a composite-key frame (struct-typed
-        ``entity_id``), or None for the classic scalar key. Auxiliary
+    def _entity_key_cols(
+        df: DataFrame | StructType,
+    ) -> tuple[str, ...] | None:
+        """Natural key columns of a composite-key frame or schema (struct-
+        typed ``entity_id``), or None for the classic scalar key. Auxiliary
         state tables (rollup state: group columns + merge counters, no
         entity key at all) also return None — before this guard,
         ``list_tables()``/``get_table_info`` CRASHED on any catalog
         containing a rollup (round-9 fix, pinned in
         tests/test_round9_store.py)."""
-        from pyspark.sql.types import StructType
-
-        if ENTITY_COL not in df.columns:
+        schema = df if isinstance(df, StructType) else df.schema
+        if ENTITY_COL not in schema.names:
             return None
-        dt = df.schema[ENTITY_COL].dataType
+        dt = schema[ENTITY_COL].dataType
         return tuple(dt.fieldNames()) if isinstance(dt, StructType) else None
 
     def _entity_key_cols_of(
         self, name: str, version: int
     ) -> tuple[str, ...] | None:
-        """Key columns of a STORED version, cached per (table, version):
-        a version's schema is immutable, so the struct-key sniff pays its
-        backend read (Parquet footer fetch) once, not on every
-        get_table_info/_validate_columns call."""
-        k = (name, version)
-        if k not in self._key_cache:
-            self._key_cache[k] = self._entity_key_cols(
-                self._backend.read_version(name, version)
-            )
-        return self._key_cache[k]
+        """Key columns of a STORED version, from the backend's schema of
+        it (memoized per version there), so get_table_info and
+        _validate_columns pay no version read for the struct-key sniff."""
+        return self._entity_key_cols(self._backend.schema(name, version))
 
     @staticmethod
     def _compose_entity_key(
@@ -6447,7 +6388,7 @@ class FeatureStore:
         if not rows:
             # scalar parity: an empty id list filters to an empty result,
             # it does not error (isin([]) semantics)
-            from pyspark.sql.types import StructField, StructType
+            from pyspark.sql.types import StructField
 
             empty = StructType([StructField(ENTITY_COL, key_type, True)])
             return self.spark.createDataFrame([], empty)

@@ -1048,17 +1048,34 @@ class TestDedupIndexPlans:
         assert "Join" not in plan.replace("joinType", "")
         assert plan.count("HashAggregate") == 2  # partial + final
 
-    def test_batch_joins_are_equi_never_cartesian(self, dd):
+    def test_batch_joins_are_equi_never_cartesian(self, dd, monkeypatch):
         """dedup_batch: exact arm = LeftSemi on the 16-byte hash; fuzzy
         arm = equi join on (band, bucket); verify joins are candidate-
-        bounded equi joins. No cartesian product anywhere."""
+        bounded equi joins. No cartesian product anywhere. The candidate
+        pairs are checkpointed before the verify, so the banded probe
+        join shows in the plan of the frame handed to localCheckpoint,
+        not in the executed plan of the result."""
+        import re
+
         fs, new = dd
+        cls = type(new)
+        orig = cls.localCheckpoint
+        checkpointed = []
+
+        def spy(df, *a, **kw):
+            checkpointed.append(executed_plan(df))
+            return orig(df, *a, **kw)
+
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
         out = fs.dedup_batch("dd", new, id_col="doc_id")
         plan = executed_plan(out)
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+        for p in [plan, *checkpointed]:
+            assert "CartesianProduct" not in p
+            assert "BroadcastNestedLoopJoin" not in p
         assert "LeftSemi" in plan  # the exact arm
-        assert "bucket" in plan  # the banded probe key
+        # the banded probe: an equi join keyed on (band, bucket)
+        probe = re.compile(r"Join \[band#\d+L?, bucket#\d+L?\]")
+        assert any(probe.search(p) for p in checkpointed), checkpointed
 
     def test_stored_banding_is_map_only(self, dd):
         """Buckets re-derive from the persisted signatures at O(bands)

@@ -351,29 +351,37 @@ class TestAdviceGuards:
         with pytest.raises(FeatureValidationError, match="in order"):
             fs.merge_entities("t", bad)
 
-    def test_get_table_info_uses_key_cache(self, spark):
-        """The struct-key sniff reads the backend once per (table,
-        version), not per call (round-8 ADVICE fix)."""
-        fs = FeatureStore(spark)
+    def test_get_table_info_reads_no_version(self, spark, tmp_path):
+        """The struct-key sniff reads the version's schema from the
+        backend (memoized per version on Parquet), never the version
+        itself, and runs no Spark job (round-8 ADVICE fix)."""
         df = spark.createDataFrame(
             [("u1", "m1", ts("2024-01-01"), 5)],
             ["user_id", "merchant_id", "timestamp", "x"],
         )
-        fs.register("t", df, entity_cols=["user_id", "merchant_id"])
-        fs.get_table_info("t")
-        calls = {"n": 0}
-        orig = fs._backend.read_version
+        sc = spark.sparkContext
+        for path in (None, str(tmp_path)):
+            fs = FeatureStore(spark, storage_path=path)
+            fs.register("t", df, entity_cols=["user_id", "merchant_id"])
+            calls = {"n": 0}
+            orig = fs._backend.read_version
 
-        def counting(name, version):
-            calls["n"] += 1
-            return orig(name, version)
+            def counting(name, version):
+                calls["n"] += 1
+                return orig(name, version)
 
-        fs._backend.read_version = counting
-        info = fs.get_table_info("t")
-        assert info.entity_columns == ("user_id", "merchant_id")
-        fs._validate_columns("t", ["x"])
-        assert calls["n"] == 0  # cached — no backend read for the sniff
-        fs._backend.read_version = orig
+            fs._backend.read_version = counting
+            group = f"key_sniff_{path is None}"
+            sc.setJobGroup(group, "get_table_info key sniff")
+            try:
+                info = fs.get_table_info("t")
+                fs._validate_columns("t", ["x"])
+            finally:
+                sc.setJobGroup("key_sniff_done", "")
+                fs._backend.read_version = orig
+            assert info.entity_columns == ("user_id", "merchant_id")
+            assert calls["n"] == 0, path  # no backend read for the sniff
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], path
 
 
 class TestIncrementalMaterialize:

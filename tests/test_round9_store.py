@@ -135,30 +135,36 @@ class TestNoTtlSentinel:
             store.register("v", self._df(spark), ttl_seconds=float("nan"))
 
 
-class TestDropRollupKeyCache:
-    def test_drop_rollup_purges_state_table_key_cache(self, spark, store):
+class TestDropRollupStateSchema:
+    def test_drop_rollup_leaves_no_stale_state_schema(self, spark, tmp_path):
         rows = [("e1", ts("2024-01-01"), "a", 1.0), ("e2", ts("2024-01-02"), "b", 2.0)]
         df = spark.createDataFrame(
             rows, ["entity_id", "timestamp", "grp", "val"]
         )
-        store.register("src", df)
-        store.create_rollup("src", "r", ["grp"], ["val"])
-        rname = "r" + store._ROLLUP_SUFFIX
-        # list_tables must tolerate the keyless rollup state table in the
-        # catalog (it CRASHED before the round-9 _entity_key_cols guard)
-        assert rname in [i.name for i in store.list_tables()]
-        # populate the per-(table, version) key cache for the state table
-        store.get_table_info(rname)
-        assert any(k[0] == rname for k in store._key_cache)
-        store.drop_rollup("r")
-        assert not any(k[0] == rname for k in store._key_cache), (
-            "a stale key-shape entry survived drop_rollup; a re-created "
-            "same-named rollup would serve it at version 1"
-        )
-        # re-create cleanly: the state table restarts at version 1 with
-        # a fresh cache entry
-        store.create_rollup("src", "r", ["grp"], ["val"])
-        assert store.get_table_info(rname).version == 1
+        for path in (None, str(tmp_path)):
+            store = FeatureStore(spark, storage_path=path)
+            store.register("src", df)
+            store.create_rollup("src", "r", ["grp"], ["val"])
+            rname = "r" + store._ROLLUP_SUFFIX
+            # list_tables must tolerate the keyless rollup state table in
+            # the catalog (it CRASHED before the round-9 _entity_key_cols
+            # guard)
+            assert rname in [i.name for i in store.list_tables()]
+            first = store._backend.schema(rname, 1)
+            store.drop_rollup("r")
+            assert not store._backend.exists(rname)
+            # re-create with a different state shape: the state table
+            # restarts at version 1, and the schema served for it is the
+            # new one, not a leftover of the dropped table
+            store.create_rollup("src", "r", ["grp"])
+            assert store.get_table_info(rname).version == 1
+            fresh = (
+                FeatureStore(spark, storage_path=path)._backend if path
+                else store._backend
+            )
+            now = store._backend.schema(rname, 1)
+            assert now != first
+            assert now == fresh.read_version(rname, 1).schema
 
 
 class TestExportOnline:
@@ -375,9 +381,22 @@ class TestOneJobRegister:
         )
         with pytest.raises(FeatureValidationError, match="empty"):
             store.register("ghost", df)
-        # the rollback leaves NO trace: no table, no version, no cache
+        # the rollback leaves NO trace: no table, no version, and a
+        # re-register under the name starts clean at version 1 with its
+        # own key shape and columns
         assert "ghost" not in store.table_names
-        assert not any(k[0] == "ghost" for k in store._key_cache)
+        assert not store._backend.exists("ghost")
+        info = store.register(
+            "ghost",
+            spark.createDataFrame(
+                [("u1", "m1", ts("2024-01-01"), 5)],
+                ["user_id", "merchant_id", "timestamp", "x"],
+            ),
+            entity_cols=["user_id", "merchant_id"],
+        )
+        assert (info.version, info.entity_columns, info.columns) == (
+            1, ("user_id", "merchant_id"), ("x",)
+        )
 
     def test_empty_reregister_keeps_previous_version(
         self, spark, store, feature_df
@@ -402,6 +421,7 @@ class TestOneJobRegister:
         with pytest.raises(FeatureValidationError, match="empty"):
             fs.register("ghost", df)
         assert "ghost" not in fs.table_names
+        assert not fs._backend._schemas  # the rollback evicted its schema
         # and a fresh open agrees (nothing was published to disk meta)
         fs2 = FeatureStore(spark, storage_path=str(tmp_path))
         assert "ghost" not in fs2.table_names
