@@ -33,6 +33,7 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
 from .errors import FeatureStoreError, FeatureTableNotFoundError, FeatureValidationError
@@ -59,6 +60,30 @@ DEFAULT_MAX_VERSIONS = 10
 NO_TTL = float("inf")
 DT_COL = "__dt__"  # hidden date-partition column (date_partition=True)
 HIDDEN_COLS = (ROW_ID_COL, DT_COL)
+# lossless widenings between atomic types (see _lossless_cast)
+_WIDER_TYPES = {
+    T.ByteType: (T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType),
+    T.ShortType: (T.IntegerType, T.LongType, T.FloatType, T.DoubleType),
+    T.IntegerType: (T.LongType, T.DoubleType),
+    T.FloatType: (T.DoubleType,),
+}
+# decimal digits an integral value can carry
+_INTEGRAL_DIGITS = {T.ByteType: 3, T.ShortType: 5, T.IntegerType: 10, T.LongType: 20}
+
+
+def _lossless_cast(src: T.DataType, dst: T.DataType) -> bool:
+    """Whether every ``src`` value casts to ``dst`` exactly."""
+    if isinstance(src, T.NullType) or src.simpleString() == dst.simpleString():
+        return True
+    if isinstance(src, T.ArrayType) and isinstance(dst, T.ArrayType):
+        return _lossless_cast(src.elementType, dst.elementType)
+    if isinstance(dst, T.DecimalType):
+        if isinstance(src, T.DecimalType):
+            return (dst.scale >= src.scale
+                    and dst.precision - dst.scale >= src.precision - src.scale)
+        digits = _INTEGRAL_DIGITS.get(type(src))
+        return digits is not None and dst.precision - dst.scale >= digits
+    return isinstance(dst, _WIDER_TYPES.get(type(src), ()))
 
 
 @dataclass(frozen=True)
@@ -491,19 +516,27 @@ class FeatureStore:
         the tie-break order (the same outcome pandas' stable sort of the
         concatenated frame would give, reference store.py:483-485): the
         new batch's hidden ``__row_id__`` is offset past the stored
-        maximum. At scale this is the right write path: the old version's
-        files are re-referenced by a union plan, not rewritten row-by-row,
-        and the new batch is the only data shuffled in.
+        maximum. Only the batch is written: the backend publishes the new
+        version as the current version's fragment chain plus one fragment
+        holding the batch (``sources/registry.py``), so an append costs
+        O(batch) bytes however long the history; ``compact_version``
+        folds a long chain back into one fragment.
+
+        Incoming columns must have the stored types: a lossless widening
+        (``int`` -> ``bigint``, ``float`` -> ``double``, a wider decimal,
+        an all-null column) is cast to the stored type, and any other
+        mismatch is refused before anything is written — history is never
+        retyped.
 
         ``allow_new_columns=True`` permits SCHEMA WIDENING: the incoming
         batch may carry feature columns the table does not have yet;
-        existing history null-backfills them in the new version (a
-        typed-NULL projection over re-referenced files — no rewrite),
-        while earlier versions keep their narrower schema for time
-        travel. Widening is the only evolution allowed — an incoming
-        batch MISSING existing columns is still refused (silently
-        null-filling history-shaped columns for new rows is a pipeline
-        bug, not evolution; re-register to shrink). A widening append
+        existing history reads them as null in the new version (older
+        fragments simply lack the column — no rewrite), while earlier
+        versions keep their narrower schema for time travel. Widening is
+        the only evolution allowed — an incoming batch MISSING existing
+        columns is still refused (silently null-filling history-shaped
+        columns for new rows is a pipeline bug, not evolution;
+        re-register to shrink). A widening append
         invalidates the incremental-online watermark: the materialized
         snapshot's schema no longer matches history, so the next
         materialize_online(incremental=True) falls back to one full
@@ -536,14 +569,10 @@ class FeatureStore:
                 f"append('{name}'): column mismatch — table has {sorted(visible)}, "
                 f"incoming has {sorted(incoming)}.{hint}"
             )
-        prepared = self._prepare_dataframe(df.select(*visible, *widened))
-        if widened:
-            # null-backfill history for the new columns, typed from the
-            # incoming batch — a projection over re-referenced files
-            for c in widened:
-                current = current.withColumn(
-                    c, F.lit(None).cast(prepared.schema[c].dataType)
-                )
+        prepared = self._cast_to_stored(
+            self._prepare_dataframe(df.select(*visible, *widened)),
+            current.schema, context=f"append('{name}')",
+        )
         # from version metadata (observed at the last publish) — no
         # full-history max() scan; loose-after-rewrite is fine, ids only
         # need to keep increasing
@@ -551,14 +580,14 @@ class FeatureStore:
         prepared = prepared.withColumn(
             ROW_ID_COL, F.col(ROW_ID_COL) + F.lit(int(max_id) + 1)
         )
-        merged = current.select(*prepared.columns).unionByName(prepared)
-        # same one-job contract as register: the union is evaluated once,
-        # by the write, with count + new max row id observed on the way
-        merged, row_count, new_max = self._observed_stats(merged)
-        new_version = self._backend.meta(name).version + 1
+        # same one-job contract as register: the batch is evaluated once,
+        # by the write, with count + max row id observed on the way; the
+        # backend writes only the batch and chains it onto the base
+        prepared, row_count, new_max = self._observed_stats(prepared)
+        base = self._backend.meta(name).version
         self._backend.write_version(
-            name, new_version, merged, row_count, description,
-            max_row_id=new_max,
+            name, base + 1, prepared, row_count, description,
+            max_row_id=new_max, base=base,
         )
         self._prune_history(name)
         if widened:
@@ -672,21 +701,24 @@ class FeatureStore:
     def compact_version(
         self, name: str, version: int | None = None, target_files: int = 1
     ) -> dict[str, int | None]:
-        """Small-file compaction: rewrite one version's storage into
-        ``target_files`` files, preserving rows, version number and
-        created_at exactly (verified by row accounting before the swap).
-        The 100 TB operational answer to streaming/append ingest: every
-        micro-batch ``append`` writes its own small files, and a table
-        that accumulates millions of them becomes listing- and
-        open()-bound long before it is IO-bound — periodic compaction is
-        what keeps scan parallelism governed by ``maxPartitionBytes``
-        instead of file count (what OPTIMIZE does on Delta/Iceberg;
-        here it is ``repartition`` + ``rewrite_version``'s
-        scratch-write-and-swap, so readers never see a half-compacted
-        version). In-memory backends compact to a no-op on file counts
-        (reported as None) but still validate the version.
+        """Small-file compaction: fold one version's whole fragment chain
+        into a single fragment of ``target_files`` files, preserving
+        rows, version number and created_at exactly (verified by row
+        accounting before the swap). The 100 TB operational answer to
+        streaming/append ingest: every micro-batch ``append`` adds its
+        own fragment of small files, and a table that accumulates
+        millions of them becomes listing- and open()-bound long before it
+        is IO-bound — periodic compaction is what keeps scan parallelism
+        governed by ``maxPartitionBytes`` instead of file count (what
+        OPTIMIZE does on Delta/Iceberg; here it is ``repartition`` +
+        ``rewrite_version``, which writes a fresh directory and re-points
+        only this version, so readers never see a half-compacted version
+        and every other version sharing the old fragments reads exactly
+        what it read before). In-memory backends compact to a no-op on
+        file counts (reported as None) but still validate the version.
 
-        Returns {"version", "rows", "files_before", "files_after"}.
+        Returns {"version", "rows", "files_before", "files_after"};
+        ``files_before`` counts the files of the whole chain.
         """
         self._require_table(name)
         if target_files < 1:
@@ -702,13 +734,7 @@ class FeatureStore:
                 f"Available versions: {versions}"
             )
 
-        def _file_count() -> int | None:
-            vp = getattr(self._backend, "_version_path", None)
-            if vp is None:
-                return None
-            return sum(1 for _ in vp(name, v).glob("**/*.parquet"))
-
-        files_before = _file_count()
+        files_before = self._backend.file_count(name, v)
         expected = self._backend.meta(name).versions[v].row_count
         compacted = self._backend.read_version(name, v).repartition(target_files)
         rows = compacted.count()
@@ -722,7 +748,7 @@ class FeatureStore:
             "version": v,
             "rows": rows,
             "files_before": files_before,
-            "files_after": _file_count(),
+            "files_after": self._backend.file_count(name, v),
         }
 
     def erase_entities(
@@ -4110,6 +4136,33 @@ class FeatureStore:
         if self._date_partition and DT_COL not in out.columns:
             out = out.withColumn(DT_COL, F.to_date(F.col(TIMESTAMP_COL)))
         return out
+
+    @staticmethod
+    def _cast_to_stored(
+        df: DataFrame, stored: StructType, context: str
+    ) -> DataFrame:
+        """``df`` with every column the table already stores cast to the
+        stored type when the cast is lossless; any other type mismatch is
+        refused. An append writes only its batch, so its columns must
+        match history — there is no union left to retype history."""
+        bad = []
+        for c in df.columns:
+            if c not in stored.names:
+                continue
+            src, dst = df.schema[c].dataType, stored[c].dataType
+            if src.simpleString() == dst.simpleString():
+                continue
+            if not _lossless_cast(src, dst):
+                bad.append(f"{c}: {src.simpleString()} -> {dst.simpleString()}")
+                continue
+            df = df.withColumn(c, F.col(c).cast(dst))
+        if bad:
+            raise FeatureValidationError(
+                f"{context}: incoming column type(s) do not match the "
+                f"stored types and cannot be cast without loss: {bad}. "
+                f"Cast the batch, or re-register to change types."
+            )
+        return df
 
     @staticmethod
     def _observed_count(df: DataFrame):

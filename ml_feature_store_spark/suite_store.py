@@ -2023,10 +2023,10 @@ def q_f40_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-WIDENING append (store.py append(allow_new_columns=True),
     round-9 — Feast/Tecton feature-view evolution): the table is
     registered from the early half of events WITHOUT event_type, then
-    the late half appends WITH it; the new version null-backfills
-    history via a typed-NULL projection over re-referenced files (no
-    rewrite — at 100 TB adding a feature column to a year of history is
-    a metadata-cost operation), while version 1 keeps its narrower
+    the late half appends WITH it; the new version's older fragments
+    read the new column as null (only the late batch is written — at
+    100 TB adding a feature column to a year of history is a
+    metadata-cost operation), while version 1 keeps its narrower
     schema for time travel (pytest-pinned, with the missing-column and
     un-flagged-widening refusal lanes). The oracle replays the union:
     early rows carry NULL event_type, late rows their real one — a
